@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract + scaling evidence).
 
 Default mode: runs the headline operators on a deterministic
-sf-scaled interleaved-document table at ``local[$SPARK_GRAFT_CPUS]``
+sf-scaled interleaved-document table at ``local[$SPARK_GRAFT_CPUS]`` (default:
+the CPUs this process may run on)
 and prints ONE JSON line::
 
   {"metric": "spatial-join + tiling throughput", "value": <docs/sec>,
@@ -233,8 +234,10 @@ def run_once(cores: int, sf_dir: str, n_docs: int, n_polys: int = 2000, stages=N
 
 
 def main() -> int:
+    from geomesa_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--n-docs", type=int, default=int(os.environ.get("BENCH_DOCS", "0")) or None)
     ap.add_argument("--scaling", action="store_true", help="run at local[N] and local[4N], report efficiency")

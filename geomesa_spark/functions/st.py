@@ -501,9 +501,7 @@ def _rel_grouped(
             out = np.full(len(a), None, dtype=object)
             pxv, pyv = px.to_numpy(), py.to_numpy()
             for w, idx in a.groupby(a, sort=False).indices.items():
-                res = per_geom_points(_parse(w), pxv[idx], pyv[idx])
-                for i, r in zip(idx, res):
-                    out[i] = bool(r)
+                out[idx] = np.asarray(per_geom_points(_parse(w), pxv[idx], pyv[idx]), dtype=bool)
             return pd.Series(out)
         if batch_pred is not None:
             mask = a.notna() & b.notna()
@@ -513,9 +511,7 @@ def _rel_grouped(
                 res = G.batch_predicate(
                     a[mask].to_numpy(), b[mask].to_numpy(), batch_pred
                 )
-                if batch_negate:
-                    res = ~res
-                out[mv] = [bool(r) for r in res]
+                out[mv] = ~res if batch_negate else res
             return pd.Series(out)
         return pd.Series(
             [None if (x is None or y is None) else bool(fallback(_parse(x), _parse(y)))

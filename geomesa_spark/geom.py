@@ -24,6 +24,8 @@ __all__ = [
     "to_wkt",
     "Geometry",
     "points_in_polygon",
+    "points_in_polygons",
+    "pip_pack",
     "points_in_rings",
     "haversine_m",
     "vincenty_m",
@@ -631,7 +633,8 @@ def _pip_parts(geom: Geometry) -> tuple[np.ndarray, np.ndarray]:
     PIP. Parts mirror points_in_polygon: POLYGON = one parity group over
     all rings (holes via even-odd); MULTIPOLYGON = one group per
     polygon, OR'd by the caller. Zero-edge parts are dropped (they can
-    contain nothing)."""
+    contain nothing), and so are rings of fewer than three points, which
+    points_in_rings skips."""
     if geom.geom_type == "POLYGON":
         groups = [geom.rings]
     else:
@@ -643,9 +646,9 @@ def _pip_parts(geom: Geometry) -> tuple[np.ndarray, np.ndarray]:
     for rings in groups:
         cnt = 0
         for r in rings:
-            e = _close(r)
-            if len(e) < 2:
+            if len(r) < 3:
                 continue
+            e = _close(r)
             segs.append(np.concatenate([e[:-1], e[1:]], axis=1))
             cnt += len(e) - 1
         if cnt:
@@ -750,6 +753,77 @@ def _pip_many(
         par = np.bitwise_xor.reduceat(cross, part_offs, axis=0)
         if nz.any():
             out[nz] |= np.logical_or.reduceat(par, right_offs, axis=0).any(axis=1)
+    return out
+
+
+def pip_pack(geom: Geometry) -> tuple:
+    """(bbox, closed edge array, per-part edge counts) of a POLYGON or
+    MULTIPOLYGON: the per-polygon input of points_in_polygons, built once
+    per distinct polygon and cached by callers."""
+    if geom.geom_type not in ("POLYGON", "MULTIPOLYGON"):
+        raise ValueError(f"points_in_polygon: not a polygon: {geom.geom_type}")
+    return (geom.bbox, *_pip_parts(geom))
+
+
+#: (row, edge) pairs points_in_polygons holds at once (~100 MB of temporaries)
+_PIP_PAIRS_PER_PASS = 2_000_000
+
+
+def points_in_polygons(px, py, codes, packed) -> np.ndarray:
+    """Pairwise point-in-polygon: ``out[i]`` equals
+    ``points_in_polygon(px[i:i+1], py[i:i+1], g)[0]`` for the polygon ``g``
+    that ``packed[codes[i]]`` was built from (pip_pack); ``codes[i] < 0``
+    (no polygon) gives False.
+
+    One edge-flattened pass instead of a kernel call per polygon: every
+    row expands to its polygon's edges, each (row, edge) pair takes the
+    half-open crossing test of points_in_rings (same IEEE op order, same
+    closed bbox gate as points_in_polygon), parity is an xor-reduceat per
+    (row, part), and a MULTIPOLYGON's parts are OR'd. Rows are chunked so
+    the pair arrays stay bounded."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    codes = np.asarray(codes, dtype=np.int64)
+    out = np.zeros(len(px), dtype=bool)
+    if len(px) == 0 or len(packed) == 0:
+        return out
+    bbox = np.array([p[0] for p in packed], dtype=np.float64)
+    ecnt = np.array([len(p[1]) for p in packed], dtype=np.int64)
+    edges = np.concatenate([p[1] for p in packed])
+    part_counts = np.concatenate([p[2] for p in packed])
+    eoff = np.cumsum(ecnt) - ecnt
+    # per edge: does a parity part / a polygon start here
+    part_start = np.zeros(len(edges), dtype=bool)
+    part_start[np.cumsum(part_counts) - part_counts] = True
+    poly_start = np.zeros(len(edges), dtype=bool)
+    poly_start[eoff[ecnt > 0]] = True
+
+    c = np.where(codes >= 0, codes, 0)
+    b = bbox[c]
+    rows = np.flatnonzero(
+        (codes >= 0) & (ecnt[c] > 0)
+        & (px >= b[:, 0]) & (px <= b[:, 2]) & (py >= b[:, 1]) & (py <= b[:, 3])
+    )
+    n_pairs = np.cumsum(ecnt[c[rows]])
+    step = _PIP_PAIRS_PER_PASS
+    cuts = np.searchsorted(n_pairs, np.arange(step, n_pairs[-1] if len(rows) else 0, step))
+    for chunk in np.split(rows, cuts):
+        if len(chunk) == 0:
+            continue
+        cc = c[chunk]
+        cnt = ecnt[cc]
+        pair_row = np.repeat(np.arange(len(chunk)), cnt)
+        pair_edge = np.arange(len(pair_row)) - np.repeat(np.cumsum(cnt) - cnt - eoff[cc], cnt)
+        e = edges[pair_edge]
+        x0, y0, x1, y1 = e[:, 0], e[:, 1], e[:, 2], e[:, 3]
+        qx, qy = px[chunk][pair_row], py[chunk][pair_row]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t = (qy - y0) / (y1 - y0)
+            xi = x0 + t * (x1 - x0)
+        cross = ((y0 <= qy) != (y1 <= qy)) & (qx < xi)
+        seg = np.flatnonzero(part_start[pair_edge])
+        parity = np.bitwise_xor.reduceat(cross, seg)
+        out[chunk] = np.logical_or.reduceat(parity, np.flatnonzero(poly_start[pair_edge[seg]]))
     return out
 
 

@@ -12,9 +12,11 @@ design, two phases:
    is a plain equi-join on ``cell`` — Catalyst/AQE picks broadcast vs
    shuffle; callers can force broadcast for small layers or salt for
    hot-cell skew.
-2. EXACT: candidates are refined by the vectorized PIP/haversine kernel
-   in a mapInPandas pass (shuffle-free — runs on the join output
-   partitions; each polygon WKT parses once per batch via a cache).
+2. EXACT: point candidates are refined by a keep-mask filter — a scalar
+   pandas UDF over (lon, lat, wkt, exact) only, so the rest of each row
+   never crosses the Arrow boundary; each polygon WKT parses once per
+   Python worker via a cache and a batch's pairs are tested in one
+   NumPy pass. Distance candidates are refined by haversine built-ins.
 
 Each point has exactly ONE cell at the join resolution and a polygon's
 cover cells are distinct, so the equi-join produces no duplicate pairs —
@@ -23,11 +25,12 @@ the XZ-style one-key-per-geometry property; no post-join dedup needed.
 
 from __future__ import annotations
 
-import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from geomesa_spark.geom import EARTH_RADIUS_M, parse_wkt, points_in_polygon
+from geomesa_spark.geom import EARTH_RADIUS_M, parse_wkt, pip_pack, points_in_polygons
 from geomesa_spark.operators.extract import grid_cell
 
 __all__ = [
@@ -101,6 +104,40 @@ def cover_cells_for_polys(polys: DataFrame, bits: int) -> DataFrame:
     )
 
 
+#: per Python worker: polygon WKT -> pip_pack edges. Module-level, so a
+#: reused worker parses each polygon once across tasks; cleared when full.
+_PIP_PACKS: dict = {}
+_PIP_PACKS_MAX = 10_000
+
+
+def _pip_packed(w: str) -> tuple:
+    p = _PIP_PACKS.get(w)
+    if p is None:
+        if len(_PIP_PACKS) >= _PIP_PACKS_MAX:
+            _PIP_PACKS.clear()
+        p = _PIP_PACKS[w] = pip_pack(parse_wkt(w))
+    return p
+
+
+def _pip_keep(lon: pd.Series, lat: pd.Series, wkt: pd.Series, exact: pd.Series) -> pd.Series:
+    """Keep mask of one Arrow batch: exact rows are kept as they are, the
+    rest take the half-open PIP test against their own polygon; a NULL
+    WKT is not kept."""
+    keep = exact.to_numpy(dtype=bool, na_value=False, copy=True)
+    todo = ~keep
+    if todo.any():
+        codes, uniques = pd.factorize(wkt[todo])
+        keep[todo] = points_in_polygons(
+            lon[todo].to_numpy(), lat[todo].to_numpy(), codes, [_pip_packed(w) for w in uniques]
+        )
+    return pd.Series(keep)
+
+
+#: ``pip_mask(lon, lat, wkt, exact)``: scalar pandas UDF; Spark sends only
+#: these four columns to Python and gets one bool per row back
+pip_mask = F.pandas_udf(_pip_keep, T.BooleanType())
+
+
 def refine_pip(
     candidates: DataFrame,
     lon: str = "lon",
@@ -110,51 +147,21 @@ def refine_pip(
 ) -> DataFrame:
     """Exact point-in-polygon refinement over candidate pairs.
 
-    mapInPandas (no shuffle): per Arrow batch, group rows by polygon and
-    run the vectorized kernel once per polygon. WKT parse results are
-    cached across batches within a task.
+    A Catalyst filter, ``where(pip_mask(lon, lat, wkt, exact))``, planned
+    as an ArrowEvalPython node (no shuffle): only those four columns cross
+    the Arrow boundary and one bool per row comes back; the rest of each
+    row stays in the JVM, so column pruning still reaches the join below.
+    Per batch the WKTs are factorized, each distinct polygon is parsed
+    once per worker (cached), and all (point, polygon) pairs are tested in
+    one edge-flattened NumPy pass (geom.points_in_polygons).
 
-    ``skip_col``: optional boolean column — rows where it is true bypass
-    the kernel and are kept as-is (single-pass alternative to splitting
-    the DataFrame into exact/refine branches, which would recompute the
-    whole upstream once per branch).
+    ``skip_col``: optional boolean column — rows where it is true are
+    exact already and kept without the kernel (single-pass alternative to
+    splitting the DataFrame into exact/refine branches, which would
+    recompute the whole upstream once per branch).
     """
-    schema = candidates.schema
-
-    def _refine(batches):
-        cache: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            px = pdf[lon].to_numpy()
-            py = pdf[lat].to_numpy()
-            if skip_col is not None:
-                keep = pdf[skip_col].to_numpy(dtype=bool).copy()
-                todo = ~keep
-            else:
-                keep = np.zeros(len(pdf), dtype=bool)
-                todo = None
-            sub = pdf if todo is None else pdf[todo]
-            if len(sub):
-                sub_keep = np.zeros(len(sub), dtype=bool)
-                spx = px if todo is None else px[todo]
-                spy = py if todo is None else py[todo]
-                for w, idx in sub.reset_index(drop=True).groupby(wkt, sort=False).indices.items():
-                    g = cache.get(w)
-                    if g is None:
-                        g = parse_wkt(w)
-                        if len(cache) > 10000:
-                            cache.clear()
-                        cache[w] = g
-                    sub_keep[idx] = points_in_polygon(spx[idx], spy[idx], g)
-                if todo is None:
-                    keep = sub_keep
-                else:
-                    keep[todo] = sub_keep
-            yield pdf[keep]
-
-    return candidates.mapInPandas(_refine, schema=schema)
+    exact = F.col(skip_col) if skip_col is not None else F.lit(False)
+    return candidates.where(pip_mask(F.col(lon), F.col(lat), F.col(wkt), exact))
 
 
 def spatial_join_points_in_polys(

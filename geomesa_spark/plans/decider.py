@@ -168,13 +168,7 @@ def auto_join_kwargs(
     envelope cover explosion factor) and persisted skew metrics —
     either a write manifest's per-partition rows or an analyze
     snapshot's hot-cell histogram (catalog.analyze_table)."""
-    base = estimated_size_bytes(polys)
-    # cover explosion ≈ cells per envelope, which quadruples per extra
-    # grid bit (cell edge halves in both dimensions); anchored at a
-    # conservative ×4 for the default 6-bit join grid, clamped so a
-    # pathological bits choice can't zero out or explode the estimate
-    mult = min(max(4.0 * 4.0 ** (bits - 6), 1.0), 64.0)
-    cover_bytes = int(base * mult)
+    cover_bytes = int(estimated_size_bytes(polys) * cover_explode_factor(bits))
     skew = stats_skew_ratio(table_stats)
     if skew is None:
         skew = manifest_skew_ratio(manifest)

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["build_session", "stop_session"]
+__all__ = ["build_session", "stop_session", "default_cores", "default_driver_memory"]
 
 
 #: RocksDB-backed streaming state (bundled rocksdbjni): keeps per-key
@@ -22,6 +22,31 @@ __all__ = ["build_session", "stop_session"]
 ROCKSDB_STATE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else half of physical RAM (1-16 GB), so
+    a big job spills before the host runs out of memory."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "4g"
+    return f"{max(1, min(16, kb // (2 * 1024 * 1024)))}g"
 
 
 def build_session(
@@ -36,7 +61,7 @@ def build_session(
     SPARK_GRAFT_ROCKSDB_STATE env var). Session-level because the
     provider is read at streaming-query start; ``live.use_rocksdb_state``
     toggles it on an existing session."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     if rocksdb_state is None:
         rocksdb_state = os.environ.get("SPARK_GRAFT_ROCKSDB_STATE", "") == "1"
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -49,7 +74,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

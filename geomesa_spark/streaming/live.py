@@ -296,8 +296,9 @@ def live_spatial_join(
     Streaming semantics end-to-end).
 
     Same two-phase shape as the batch operator — cell equi-join against
-    the broadcast exploded cover, envelope filter, vectorized PIP
-    refine (mapInPandas is streaming-supported) — so a micro-batch
+    the broadcast exploded cover, envelope filter, then refine_pip's
+    keep-mask filter (a scalar pandas UDF over lon, lat, wkt and the
+    exact flag; stateless, so streaming-supported) — so a micro-batch
     plans exactly like the batch join and the static side broadcasts
     once per trigger."""
     from geomesa_spark.operators.joins import cover_cells_for_polys, refine_pip

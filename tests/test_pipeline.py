@@ -8,6 +8,8 @@ Mirrors the reference's golden end-to-end store-query suites
 fixtures.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -99,14 +101,15 @@ class TestPlannerPruning:
 
 
 class TestSpatialJoin:
-    def _oracle_pairs(self, points, polys):
+    def _oracle_pairs(self, points, polys, refine="auto"):
         pts = points.select("doc_id", "span_offset", "lon", "lat").toPandas()
-        pls = polys.select("poly_id", "kind", "wkt").toPandas()
+        pls = polys.select("poly_id", "kind", "wkt", "min_lon", "min_lat", "max_lon", "max_lat").toPandas()
         pairs = set()
         for _, p in pls.iterrows():
             g = parse_wkt(p["wkt"])
-            if p["kind"] == "bbox":
-                x0, y0, x1, y1 = g.bbox
+            if refine == "never" or (refine == "auto" and p["kind"] == "bbox"):
+                # the closed envelope columns (a hexagon's are wider than its WKT)
+                x0, y0, x1, y1 = p["min_lon"], p["min_lat"], p["max_lon"], p["max_lat"]
                 m = (
                     (pts.lon >= x0) & (pts.lon <= x1) & (pts.lat >= y0) & (pts.lat <= y1)
                 ).to_numpy()
@@ -149,6 +152,72 @@ class TestSpatialJoin:
             "doc_id", "span_offset", "poly_id"
         )
         assert got.count() == got.distinct().count()
+
+    @pytest.mark.parametrize("refine", ["auto", "always", "never"])
+    def test_refine_modes_broadcast_and_salted_match_oracle(self, spark, points, polys, refine):
+        want = self._oracle_pairs(points, polys, refine)
+        # without this, Catalyst broadcasts the small salted cover anyway
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            for kw in ({"broadcast": True}, {"broadcast": False, "salt_buckets": 4}):
+                df = spatial_join_points_in_polys(points, polys, bits=6, refine=refine, **kw)
+                got = df.select("doc_id", "span_offset", "poly_id").toPandas()
+                assert set(map(tuple, got.itertuples(index=False))) == want, kw
+                if not kw["broadcast"]:
+                    plan = df._jdf.queryExecution().executedPlan().toString()
+                    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+                    assert df.count() == len(got)
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        assert len(want) > 0
+
+    def test_refine_is_keep_mask_filter_not_map_in_pandas(self, spark, polys, points, tmp_path):
+        # polygons from parquet: the fixture's WKT generator is itself a
+        # MapInPandas, and this test is about the refine only
+        polys.write.parquet(str(tmp_path / "polys"))
+        layer = spark.read.parquet(str(tmp_path / "polys"))
+        for refine in ("auto", "always"):
+            df = spatial_join_points_in_polys(points, layer, bits=6, refine=refine, broadcast=True)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "MapInPandas" not in plan
+            exact = r"\(kind#\d+ = bbox\)" if refine == "auto" else "false"
+            assert re.search(
+                rf"ArrowEvalPython \[_pip_keep\(lon#\d+, lat#\d+, wkt#\d+, {exact}\)#\d+\]", plan
+            ), plan
+            # count() prunes the join's unused columns below the refine
+            counted = df.groupBy().count()
+            cplan = counted._jdf.queryExecution().executedPlan().toString()
+            assert "MapInPandas" not in cplan and "ArrowEvalPython" in cplan
+            assert counted.collect()[0][0] == len(df.collect())
+
+    def test_on_edge_boundary_contract(self, spark):
+        """Pins the join's on-edge behaviour: the bbox kind takes the closed
+        envelope under refine='auto'; every other kind, and every kind under
+        'always', takes the half-open crossing rule (left and bottom edges
+        in, right and top edges out)."""
+        sq = "POLYGON ((10 10, 11 10, 11 11, 10 11, 10 10))"
+        layer = spark.createDataFrame(
+            [(pid, kind, sq, 10.0, 10.0, 11.0, 11.0) for pid, kind in (("p-box", "bbox"), ("p-other", "convex"))],
+            "poly_id string, kind string, wkt string, min_lon double, min_lat double, max_lon double, max_lat double",
+        )
+        named = {
+            "center": (10.5, 10.5), "left": (10.0, 10.5), "bottom": (10.5, 10.0),
+            "right": (11.0, 10.5), "top": (10.5, 11.0), "ll": (10.0, 10.0),
+            "lr": (11.0, 10.0), "ul": (10.0, 11.0), "ur": (11.0, 11.0),
+        }
+        pts = spark.createDataFrame(
+            [(k, 0, x, y) for k, (x, y) in named.items()],
+            "doc_id string, span_offset int, lon double, lat double",
+        )
+        half_open = {"center", "left", "bottom", "ll"}
+
+        def kept(refine):
+            rows = spatial_join_points_in_polys(pts, layer, bits=6, refine=refine, broadcast=True).collect()
+            return {p: {r.doc_id for r in rows if r.poly_id == p} for p in ("p-box", "p-other")}
+
+        assert kept("auto") == {"p-box": set(named), "p-other": half_open}
+        assert kept("always") == {"p-box": half_open, "p-other": half_open}
+        assert kept("never") == {"p-box": set(named), "p-other": set(named)}
 
 
 class TestDistanceJoinAndKnn:

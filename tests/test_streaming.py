@@ -21,18 +21,17 @@ from geomesa_spark.streaming.live import (
 )
 
 
-def _wait_rows(q, check, timeout=60, drain=True):
-    """Poll until check() is true. drain=False sleep-polls instead of
-    processAllAvailable — required for stateful queries whose batches
-    can't outpace a continuous rate source."""
+def _wait_rows(q, check, timeout=60):
+    """Sleep-poll until check() is true or ``timeout`` seconds pass. Not
+    processAllAvailable: against a continuous rate source it returns only
+    once a micro-batch outpaces the source, so a slow host made it wait
+    without bound and the deadline was never checked."""
     deadline = time.time() + timeout
     while time.time() < deadline:
-        if drain:
-            q.processAllAvailable()
         if check():
             return True
         time.sleep(1)
-    return False
+    return check()
 
 
 @pytest.fixture()
@@ -144,7 +143,6 @@ class TestStreaming:
                 ).collect()[0].c
                 > 10,
                 timeout=120,
-                drain=False,
             )
             assert ok
             # state accumulates monotonically per fid across updates
@@ -435,7 +433,6 @@ class TestRocksDbStatefulOperator:
                     ).collect()[0].c
                     > 10,
                     timeout=120,
-                    drain=False,
                 )
                 assert ok
             finally:

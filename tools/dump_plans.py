@@ -80,8 +80,11 @@ def main() -> int:
         sections.append((
             "Broadcast two-phase spatial join (J2)",
             "scan → extract (regexp, codegen) → BroadcastHashJoin on cell with the "
-            "envelope conjunct as the join condition → MapInPandas exact refine. "
-            "One stage on the probe side, no shuffle.",
+            "envelope conjunct as the join condition → exact refine as a keep-mask "
+            "filter: ArrowEvalPython over (lon, lat, wkt, kind = bbox) only, then "
+            "Filter on the returned bool; the rest of each row stays in the JVM. "
+            "(The MapInPandas under the broadcast is the polygon fixture's WKT "
+            "generator, not the refine.) One stage on the probe side, no shuffle.",
             plan_str(j),
         ))
 
@@ -91,7 +94,8 @@ def main() -> int:
         sections.append((
             "Salted shuffle spatial join (J2, skew path)",
             "both sides exchange on (cell, salt) — a hot cell spreads across 8 "
-            "reducers; AQE may still convert to broadcast at this test size.",
+            "reducers; AQE may still convert to broadcast at this test size. The "
+            "refine is the same ArrowEvalPython keep-mask filter as above.",
             plan_str(js),
         ))
 
